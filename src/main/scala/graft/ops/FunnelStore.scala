@@ -60,24 +60,41 @@ object FunnelStore {
     * generation re-derives only the remaining GLOBAL stages (the
     * frozen-classifier gate, budget, decontamination, split) — on
     * 100 TB the per-landing bill for the foldable stages drops from
-    * O(store) to O(Δ). `clusters` (VERDICT r16 item 3) lets the
-    * caller hand in an incrementally maintained family table
-    * ([[Cluster.incrementalClusters]] over its pair/cluster
-    * snapshots); the funnel then skips its own pair generation + CC
-    * entirely. The caller owns the equality obligation (the
-    * incremental table must equal the one-shot
-    * `dedupClusters(s2, pairsFromPostings(shingles(s2)))` — pinned in
-    * ClusterSpec/StreamingSpec). It is a THUNK, first forced at the
-    * funnel's near-dup stage (r18, guide §2.6): the caller builds the
-    * pair+CC chain as a concurrent driver job and the funnel's
-    * emission head (meta/exact-dedup/substring checkpoints — which
-    * read only winners+coverage) materializes under the chain's tail
-    * instead of after it. The thunk must return an already-
+    * O(store) to O(Δ). `clusters` lets the caller hand in the family
+    * table of the funnel's own substring survivors, built by
+    * [[families]] (the builder the funnel itself uses); the funnel then
+    * skips its own pair generation + CC. It is a THUNK, first forced
+    * at the funnel's near-dup stage (r18, guide §2.6): the caller
+    * builds the pair+CC chain as a concurrent driver job and the
+    * funnel's emission head (meta/exact-dedup/substring checkpoints —
+    * which read only winners+coverage) materializes under the chain's
+    * tail instead of after it. The thunk must return an already-
     * materialized (checkpointed) table — the funnel reads it twice
     * (family-root filter + split join) and does NOT re-anchor it. */
   final case class Folded(raw: DataFrame, winners: DataFrame,
                           coverage: Option[DataFrame] = None,
                           clusters: Option[() => DataFrame] = None)
+
+  /** The near-dup family table (doc_id, cluster_id) of the survivor
+    * set `docs` (doc_id): hashed-posting jaccard pairs over the
+    * survivors' shingle-store rows (threshold 0.8, maxDF 50), then CC
+    * roots. Materialized — every consumer reads it twice (family-root
+    * filter + split join); [[Cluster.dedupClusters]] already barriers
+    * its edges, so the pairs themselves stay lazy. */
+  def families(shingles: DataFrame, docs: DataFrame): DataFrame =
+    Cluster.dedupClusters(docs,
+        Dedup.jaccardPairsFromPostings(shingles.join(docs, "doc_id")))
+      .localCheckpoint(false)
+
+  /** One funnel accounting row: (stage_idx BIGINT, stage, n_docs,
+    * sum_chars BIGINT) over the stage's survivors `d`, summing `chars`
+    * (0 for an empty stage). Shared by the capstone funnels. */
+  def acct(idx: Long, name: String, d: DataFrame,
+           chars: Column = col("n_chars")): DataFrame =
+    d.agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
+      .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
+        col("n_docs"), col("sum_chars"))
 
   /** One generation's increment of the substring-coverage state — the
     * dedup_substring_incremental shape (history reduces ONCE) applied
@@ -248,29 +265,7 @@ object FunnelStore {
     val spark = st.meta.sparkSession
     import spark.implicits._
     graft.functions.GraftHash64.register(spark)
-    // stage-level dev timing: set GRAFT_FUNNEL_PROBE=1 to print each
-    // stage's forced materialization time (zero cost when unset) — the
-    // profiling loop that attributed the fold bill to the CC collapse
-    // and the store-fed training, i.e. the per-generation audit itself
-    def probeT[A](n: String)(b: => A): A =
-      if (sys.env.contains("GRAFT_FUNNEL_PROBE")) {
-        val t0 = System.nanoTime(); val r = b
-        System.err.println(f"FUNNELSTAGE $n ${(System.nanoTime()-t0)/1e9}%.2f")
-        r
-      } else b
-    def probe(n: String, d: DataFrame): Unit =
-      if (sys.env.contains("GRAFT_FUNNEL_PROBE")) {
-        val t0 = System.nanoTime()
-        val c = d.count()
-        System.err.println(f"FUNNELSTAGE $n ${(System.nanoTime()-t0)/1e9}%.2f rows=$c")
-      }
     val meta = st.meta.localCheckpoint(false)
-    probe("meta", meta)
-    def acct(idx: Int, name: String, d: DataFrame): DataFrame =
-      d.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("n_chars").cast("bigint"), lit(0L)).as("sum_chars"))
-        .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
-          col("n_docs"), col("sum_chars"))
     val rawRow = folded match {
       case Some(f) =>
         f.raw.agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
@@ -316,7 +311,6 @@ object FunnelStore {
       .filter(coalesce(col("dup_tokens"), lit(0L)) * 5 <= col("n_tokens"))
       .drop("dup_tokens")
       .localCheckpoint(false)
-    probe("s1", s1); probe("s2", s2)
     // frozen classifier margins, materialized BEFORE the near-dup
     // stage forces the caller's pair+CC thunk (r18, guide §2.6): the
     // per-doc weight sum is independent of the family collapse, so it
@@ -326,9 +320,8 @@ object FunnelStore {
     // `trained` is a thunk for the same reason `Folded.clusters` is:
     // the caller trains concurrently and the weights are first needed
     // HERE, after the emission head has already materialized.
-    val wts = trained.map(th => probeT("trainwait")(th()))
-      .getOrElse(probeT("train")(
-        QualityClf.trainOnFeatures(st.feat, meta.select("doc_id", "y"))._2))
+    val wts = trained.map(_())
+      .getOrElse(QualityClf.trainOnFeatures(st.feat, meta.select("doc_id", "y"))._2)
     val marg = st.feat.join(s2.select("doc_id"), "doc_id")
       .join(broadcast(wts), Seq("b"), "left")
       .groupBy("doc_id")
@@ -339,19 +332,11 @@ object FunnelStore {
     // (forced HERE, after the emission head has materialized under the
     // caller's pair+CC jobs; arrives checkpointed — see [[Folded]]),
     // else pairs from the hashed shingle store + CC
-    val clusters = folded.flatMap(_.clusters).map(th => probeT("ccwait")(th()))
-      .getOrElse {
-        val pairs = probeT("pairs")(Dedup.jaccardPairsFromPostings(
-          st.shingles.join(s2.select("doc_id"), "doc_id"))
-          .select("id1", "id2"))
-        probeT("cc")(Cluster.dedupClusters(s2.select("doc_id"), pairs)
-          .localCheckpoint(false))
-      }
-    probe("clusters", clusters)
+    val clusters = folded.flatMap(_.clusters).map(_())
+      .getOrElse(families(st.shingles, s2.select("doc_id")))
     val s3 = s2.join(clusters.filter(col("doc_id") === col("cluster_id"))
         .select("doc_id"), "doc_id")
       .localCheckpoint(false)
-    probe("s3", s3)
     // frozen classifier agreement over s3; `trained` lets a
     // landing-cadence caller train CONCURRENTLY with the
     // coverage/pair/CC chain (guide §2.6 — the training reads only the
@@ -359,7 +344,6 @@ object FunnelStore {
     // trainer is integer-deterministic, so an injected weight table is
     // byte-identical to the inline train. The margins themselves were
     // materialized above, before the family collapse was forced.
-    probe("marg", marg)
     val agree = s3.join(marg, "doc_id")
       .select(when(col("quality_score") >= 0.5, 1L).otherwise(0L).as("rk"),
         when(col("marg") > 0, 1L).otherwise(0L).as("ck"), col("n_chars"))
@@ -378,17 +362,15 @@ object FunnelStore {
     // the budget rank REPARTITIONS it immediately and the quality acct
     // row re-filters s3 in one cheap stage (r18 barrier trim)
     val s4 = s3.filter(col("quality_score") >= 0.5)
-    probe("s4", s4)
     // budget prior via the (source, blk) two-level cumsum — a plain
     // partitionBy("source") window is one task per source at scale
-    val s5 = probeT("rank")(Rank.perGroupRunningSum(
+    val s5 = Rank.perGroupRunningSum(
         s4.select("doc_id", "source", "n_chars", "quality_score"),
         "source", "n_chars",
         Seq(col("quality_score").desc, col("doc_id")))
       .select("doc_id", "source", "n_chars", "prior")
       .filter(col("prior") < 25000L)
-      .localCheckpoint(false))
-    probe("s5", s5)
+      .localCheckpoint(false)
     // decontamination from the shingle store: containment of each
     // selected doc against the bench docs (doc_id < 25), any >= 0.5
     val bench = st.shingles
@@ -404,15 +386,11 @@ object FunnelStore {
       .select("doc_id").distinct()
     val s6 = s5.join(flagged, Seq("doc_id"), "left_anti")
       .localCheckpoint(false)
-    probe("cs", cs); probe("s6", s6)
     val bucket = shiftrightunsigned(call_function("graft_hash64",
       col("cluster_id").cast("string"), lit(7L)), 52)
     val s7 = s6.join(clusters.select("doc_id", "cluster_id"), "doc_id")
       .filter(bucket < 3277)
-    probe("s7", s7.localCheckpoint(false))
-    probe("agreeRows", agreeRows.localCheckpoint(false))
-    probe("rawRow", rawRow.localCheckpoint(false))
-    val out = rawRow
+    rawRow
       .unionByName(acct(1, "exact_dedup", s1))
       .unionByName(acct(2, "substring_dedup", s2))
       .unionByName(acct(3, "near_dedup", s3))
@@ -422,7 +400,5 @@ object FunnelStore {
       .unionByName(acct(7, "split_train", s7))
       .unionByName(agreeRows)
       .orderBy("stage_idx")
-    probe("FINAL", out)
-    out
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Cluster, Dedup, Multimodal, Rank, Scalars, Similarity, TextAnalysis, TopK}
+import graft.ops.FunnelStore.acct
 import graft.sources.Tables
 
 /** §2 items 22-34: the LLM-training-data-pipeline operator families
@@ -1600,11 +1601,6 @@ object PipelineQueries {
       // raw + exact-dedup stages from the shared capstone prelude
       // (one build serves pipeline_e2e/v2/v4 — see CapstonePrelude)
       val (docs, s1) = CapstonePrelude.base(s, dir)
-      def acct(idx: Int, name: String, d: DataFrame, chars: Column): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("sum_chars"))
       // the family table is reused by BOTH stage 2 (root filter) and
       // stage 6 (family-root split hash) — checkpoint once
       val clusters = Cluster.dedupClusters(s1,
@@ -1649,10 +1645,11 @@ object PipelineQueries {
       acct(0, "raw", docs, length(col("text")))
         .unionByName(acct(1, "exact_dedup", s1, length(col("text"))))
         .unionByName(acct(2, "near_dedup", s2, length(col("text"))))
-        .unionByName(acct(3, "quality", s3, col("n_chars")))
-        .unionByName(acct(4, "budget", s4, col("n_chars")))
-        .unionByName(acct(5, "decontam", s5, col("n_chars")))
-        .unionByName(acct(6, "split_train", s6, col("n_chars")))
+        .unionByName(acct(3, "quality", s3))
+        .unionByName(acct(4, "budget", s4))
+        .unionByName(acct(5, "decontam", s5))
+        .unionByName(acct(6, "split_train", s6))
+        .withColumn("stage_idx", col("stage_idx").cast("int")) // v1 schema
         .orderBy("stage_idx")
     }),
 
@@ -1679,11 +1676,6 @@ object PipelineQueries {
       // raw → exact dedup → substring survivors from the shared
       // capstone prelude (one build serves pipeline_e2e/v2/v4)
       val (docs, s1, s2) = CapstonePrelude.withSubstring(s, dir)
-      def acct(idx: Int, name: String, d: DataFrame, chars: Column): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("sum_chars"))
       // stage 3: near-dup family collapse over the substring survivors
       // (shared artifact — v2/v4/v3-fast-path make the identical call)
       val clusters = CapstonePrelude.clusters(s, dir)
@@ -1740,10 +1732,10 @@ object PipelineQueries {
         .unionByName(acct(1, "exact_dedup", s1, length(col("text"))))
         .unionByName(acct(2, "substring_dedup", s2, length(col("text"))))
         .unionByName(acct(3, "near_dedup", s3, length(col("text"))))
-        .unionByName(acct(4, "quality", s4, col("n_chars")))
-        .unionByName(acct(5, "budget", s5, col("n_chars")))
-        .unionByName(acct(6, "decontam", s6, col("n_chars")))
-        .unionByName(acct(7, "split_train", s7, col("n_chars")))
+        .unionByName(acct(4, "quality", s4))
+        .unionByName(acct(5, "budget", s5))
+        .unionByName(acct(6, "decontam", s6))
+        .unionByName(acct(7, "split_train", s7))
         .unionByName(agreeRows)
         .orderBy("stage_idx")
     }),
@@ -1769,11 +1761,6 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir)
         .select("doc_id", "text", "source", "lang")
         .localCheckpoint(false)
-      def acct(idx: Int, name: String, d: DataFrame, chars: Column): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("sum_chars"))
       val s0 = docs.filter(
           regexp_count(col("text"), lit(PiiEmailRe)) +
             regexp_count(col("text"), lit(PiiIpRe)) +
@@ -1870,11 +1857,11 @@ object PipelineQueries {
         .unionByName(acct(2, "exact_dedup", s1, length(col("text"))))
         .unionByName(acct(3, "substring_dedup", s2, length(col("text"))))
         .unionByName(acct(4, "near_dedup", s3, length(col("text"))))
-        .unionByName(acct(5, "quality", s4, col("n_chars")))
-        .unionByName(acct(6, "dsir_select", s45, col("n_chars")))
-        .unionByName(acct(7, "budget", s5, col("n_chars")))
-        .unionByName(acct(8, "decontam", s6, col("n_chars")))
-        .unionByName(acct(9, "split_train", s7, col("n_chars")))
+        .unionByName(acct(5, "quality", s4))
+        .unionByName(acct(6, "dsir_select", s45))
+        .unionByName(acct(7, "budget", s5))
+        .unionByName(acct(8, "decontam", s6))
+        .unionByName(acct(9, "split_train", s7))
         .unionByName(agreeRows)
         .orderBy("stage_idx")
     }),
@@ -1899,11 +1886,6 @@ object PipelineQueries {
       // shared prelude: raw → exact dedup → substring survivors (both
       // branches consume the survivors)
       val (docs, s1, s2) = CapstonePrelude.withSubstring(s, dir)
-      def acct(idx: Int, name: String, d: DataFrame, chars: Column): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("sum_chars"))
       // per-doc quality over the SHARED substring survivors — the hard
       // branch filters it post-collapse, the soft branch directly
       val q = TextAnalysis.quality(s2.select("doc_id", "text"))
@@ -1956,11 +1938,11 @@ object PipelineQueries {
         .unionByName(acct(1, "exact_dedup", s1, length(col("text"))))
         .unionByName(acct(2, "substring_dedup", s2, length(col("text"))))
         .unionByName(acct(3, "hard_near_dedup", s3h, length(col("text"))))
-        .unionByName(acct(4, "hard_quality", s4h, col("n_chars")))
-        .unionByName(acct(5, "hard_budget", s5h, col("n_chars")))
-        .unionByName(acct(6, "soft_quality", s4s, col("n_chars")))
-        .unionByName(acct(7, "soft_budget", s5s, col("n_chars")))
-        .unionByName(acct(8, "overlap_budget", overlap, col("n_chars")))
+        .unionByName(acct(4, "hard_quality", s4h))
+        .unionByName(acct(5, "hard_budget", s5h))
+        .unionByName(acct(6, "soft_quality", s4s))
+        .unionByName(acct(7, "soft_budget", s5s))
+        .unionByName(acct(8, "overlap_budget", overlap))
         .orderBy("stage_idx")
     }),
 

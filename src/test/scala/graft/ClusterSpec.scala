@@ -150,41 +150,6 @@ class ClusterSpec extends AnyFunSuite {
     }
   }
 
-  test("incremental clusters equal the one-shot CC across merges, splits, exits") {
-    // VERDICT r16 item 3 — the generation-cadence family collapse must
-    // re-run CC only on touched families yet equal dedupClusters
-    // exactly. Exercise every delta class at once:
-    //   gen1: {1,2,3} chain, {10,11} pair, {20,21,22} triangle,
-    //         singletons 30, 40, 50
-    //   gen2: doc 2 EXITS (splits {1,2,3} into {1} and {3}),
-    //         pair (11,20) ADDED (merges two old families),
-    //         pair (20,21) REMOVED (triangle survives via 20-22,21-22),
-    //         pair (40,41) ADDED with NEW doc 41, new singleton 60,
-    //         old-old pair (30,50) ADDED (the cap-admission case: two
-    //         previously-untouched singletons pair up with no new doc)
-    val docs1 = Seq(1L, 2L, 3L, 10L, 11L, 20L, 21L, 22L, 30L, 40L, 50L).toDF("doc_id")
-    val pairs1 = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (20L, 22L),
-      (21L, 22L)).toDF("id1", "id2")
-    val snap = Cluster.dedupClusters(docs1, pairs1).localCheckpoint(false)
-    val docs2 = Seq(1L, 3L, 10L, 11L, 20L, 21L, 22L, 30L, 40L, 41L, 50L, 60L)
-      .toDF("doc_id")
-    val pairs2 = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 22L), (21L, 22L),
-      (11L, 20L), (40L, 41L), (30L, 50L))
-      .filter { case (a, b) => a != 2L && b != 2L } // doc 2 left the corpus
-      .toDF("id1", "id2")
-    val want = Cluster.dedupClusters(docs2, pairs2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val got = Cluster.incrementalClusters(docs2, pairs2, snap, pairs1)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == want, "incremental CC diverged from the one-shot run")
-    // spot-check the semantics the deltas were built to exercise
-    assert(want(1L) == 1L && want(3L) == 3L, "family split on doc exit")
-    assert(want(10L) == 10L && want(20L) == 10L && want(22L) == 10L,
-      "added cross-family pair must merge")
-    assert(want(30L) == 30L && want(50L) == 30L, "old-old pair must merge")
-    assert(want(41L) == 40L && want(60L) == 60L)
-  }
-
   test("funnel steps are monotonically non-increasing and windows enforced") {
     val rows = SparkEntry.queries("events_funnel")(spark, sf).collect()
     assert(rows.map(_.getString(0)).toSeq == Seq("1_view", "2_click", "3_purchase"))

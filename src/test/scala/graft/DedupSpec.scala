@@ -732,58 +732,4 @@ class DedupSpec extends AnyFunSuite {
     }
     assert(sawDup, "corpus should contain at least one duplicated gram")
   }
-
-  test("stateful posting pairs equal the one-shot derivation across " +
-      "generations, including DF-cap crossings both ways") {
-    // VERDICT r17 item 1 — the generation-cadence delta restriction
-    // must equal jaccardPairsFromPostings exactly per generation. The
-    // synthetic store forces every hazard class at maxDF = 3:
-    //   bucket A {1,2,3,4}: OVER cap gen1; doc 4 exits gen2 → {1,2,3}
-    //     crosses UNDER the cap (admits old-old pairs, the case the
-    //     old full-recompute comment guarded);
-    //   bucket B {1,2}: under cap gen1; new docs 6,7 land gen2 →
-    //     {1,2,6,7} crosses OVER the cap (old pair (1,2) must LOSE B's
-    //     contribution);
-    //   bucket C {2,3}: untouched both gens (carried verbatim);
-    //   bucket D {6,7}: brand new. gen3 then retires doc 6 to exercise
-    //   state carried FROM a delta-built generation (lazy bucket union).
-    // padding docs 101..120 (one singleton shingle each, present in
-    // every generation) make the diffs realistic minorities; gen 4
-    // retires most of the padding at once so the delta ledger also
-    // holds under a mass exit (the caller owns the full-vs-delta
-    // routing — here every generation after the first takes the DELTA
-    // branch)
-    val padding = (101L to 120L).map(i => i -> s"P$i")
-    val post = (Seq(
-      1L -> "A", 2L -> "A", 3L -> "A", 4L -> "A",
-      1L -> "B", 2L -> "B", 6L -> "B", 7L -> "B",
-      2L -> "C", 3L -> "C",
-      6L -> "D", 7L -> "D",
-      1L -> "E", 2L -> "E", 3L -> "E", 4L -> "E", 6L -> "E"
-    ) ++ padding).toDF("doc_id", "s")
-    val pad = padding.map(_._1)
-    val gens = Seq(
-      Seq(1L, 2L, 3L, 4L, 5L) ++ pad,
-      Seq(1L, 2L, 3L, 5L, 6L, 7L) ++ pad,
-      Seq(1L, 2L, 3L, 5L, 7L) ++ pad,
-      Seq(1L, 2L, 3L, 5L, 7L) ++ pad.take(3))
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    var st: Option[Dedup.PostingPairState] = None
-    gens.foreach { g =>
-      val docs = g.toDF("doc_id").localCheckpoint(false)
-      val (got, next) =
-        Dedup.jaccardPairsStateful(post, docs, st, threshold = 0.2, maxDF = 3)
-      st = Some(next)
-      val want = Dedup.jaccardPairsFromPostings(post.join(docs, "doc_id"),
-        threshold = 0.2, maxDF = 3)
-      assert(got.collect().map(key).sorted.toSeq ==
-          want.collect().map(key).sorted.toSeq,
-        s"generation ${g.mkString(",")} diverged from the one-shot pairs")
-    }
-    // the cap-crossing admissions actually happened (guard the fixture)
-    val fin = st.get
-    val bucketA = fin.buckets.filter(col("s") === "A").collect()
-    assert(bucketA.length == 1, "bucket A must be under cap after exits")
-  }
 }
